@@ -229,6 +229,19 @@ def _concat_ranges(starts, lens):
     return offs + np.arange(tot, dtype=np.int64)
 
 
+def _check_csr_bounds(n_docs: int, npost: int) -> None:
+    """Refuse inputs past the broadcast CSR kernel's integer widths
+    instead of letting them wrap: posting offsets and doc indices are
+    int32, and each (doc_a, doc_b) pair is packed into one int64 key
+    as ``doc_a * n_docs + doc_b`` — below 2**62 whenever n_docs fits
+    int32, so the one bound covers both."""
+    if max(npost, n_docs) >= 2**31:
+        raise ValueError(
+            f"{npost} postings over {n_docs} docs exceed the broadcast CSR "
+            "kernel's int32 offsets and int64 pair keys; use pair_mode='join'"
+        )
+
+
 def _pair_counts_broadcast(
     joinable: DataFrame,
     sizes: DataFrame,
@@ -310,6 +323,7 @@ def _pair_counts_broadcast(
             .astype(np.int64)
         )
         sh = post_pdf["shingle"].to_numpy()
+    _check_csr_bounds(n_docs, len(sh))
     # postings sorted by (shingle, doc-index): each shingle's segment is
     # ascending in doc index, so "co-occurrences with docs AFTER me" is
     # a contiguous tail slice of the segment — counting only those
@@ -392,7 +406,6 @@ def _pair_counts_broadcast(
                 cuts.append(max(nxt, cuts[-1] + 1))
             for s, e in zip(cuts[:-1], cuts[1:]):
                 blk = blk_all[s:e]
-                nb = len(blk)
                 cnt_s = scnt[s:e]
                 fs_idx = _concat_ranges(doc_offsets[blk], cnt_s)
                 if len(fs_idx) == 0:
@@ -669,7 +682,11 @@ def ngram_jaccard_pairs(
         )
     else:
         use_broadcast = pair_mode == "broadcast"
-        if pair_mode == "auto":
+        # the capped universe already counted its rows: past the row
+        # ceiling the doc-count probe job cannot change the answer
+        if pair_mode == "auto" and (
+            nnz_join is None or nnz_join <= broadcast_max_rows
+        ):
             st = shsets.agg(
                 F.count("*").alias("nd"), F.sum(F.size("_ha")).alias("nnz")
             ).first()

@@ -24,6 +24,8 @@ Also: embedding-based near-duplicate pairs (cosine >= threshold), the
 
 from __future__ import annotations
 
+import numpy as np
+import pyarrow as pa
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -40,6 +42,116 @@ def _norm(a):
 
 def cosine_expr(a, b):
     return _dot(a, b) / (_norm(a) * _norm(b))
+
+
+# ---------------------------------------------------------------------------
+# numpy kernels that reproduce the JVM arithmetic bit for bit
+# ---------------------------------------------------------------------------
+
+def _fold_dot(x: np.ndarray, y: np.ndarray) -> np.ndarray:
+    """Row-wise dot products of two (n, d) arrays in exactly the order
+    :func:`_dot` folds them on the JVM — ``((0.0 + x0*y0) + x1*y1) +
+    ...`` left to right, one IEEE multiply and one add per term — so a
+    kernel's similarity is bit-identical to the Spark expression's."""
+    acc = np.zeros(len(x))
+    for k in range(x.shape[1]):
+        acc = acc + x[:, k] * y[:, k]
+    return acc
+
+
+def _reaches(v: np.ndarray, threshold: float) -> np.ndarray:
+    """``v >= threshold`` under Spark's double ordering, where NaN sorts
+    above every number: a NaN similarity reaches any threshold."""
+    return (v >= threshold) | np.isnan(v)
+
+
+_GEMM_BLOCK_CELLS = 4_000_000
+
+
+def _close_pairs(
+    x: np.ndarray, threshold: float, norms: np.ndarray | None = None
+) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """All row pairs (i < j) of ``x`` whose cosine reaches ``threshold``,
+    with that cosine. The cosine is ``_fold_dot`` of the rows when they
+    are unit vectors (``norms`` None) and ``fold / (norms_i *
+    norms_j)`` otherwise — the two Spark expressions this replaces. A
+    zero denominator makes no pair (Spark's null for x / 0; with ANSI
+    on, the self-join raised DIVIDE_BY_ZERO instead).
+
+    A GEMM over row blocks prefilters at ``threshold - 1e-9``: BLAS
+    sums in another order than the fold, but for unit vectors the two
+    differ by ~1e-15, so the prefilter cannot drop a qualifying pair.
+    The survivors are then rechecked with the exact fold. A block holds
+    at most ``_GEMM_BLOCK_CELLS`` scores, so a 10k-row group never
+    allocates the full m x m matrix."""
+    m = len(x)
+    step = max(1, _GEMM_BLOCK_CELLS // max(m, 1))
+    with np.errstate(divide="ignore", invalid="ignore"):
+        u = x if norms is None else x / norms[:, None]
+        ii, jj = [np.empty(0, np.int64)], [np.empty(0, np.int64)]
+        for s in range(0, m, step):
+            r, c = np.nonzero(_reaches(u[s : s + step] @ u[s:].T, threshold - 1e-9))
+            upper = c > r
+            ii.append(r[upper] + s)
+            jj.append(c[upper] + s)
+        i, j = np.concatenate(ii), np.concatenate(jj)
+        cos = _fold_dot(x[i], x[j])
+        keep = np.ones(len(i), bool)
+        if norms is not None:
+            den = norms[i] * norms[j]
+            keep = den != 0
+            cos = cos / den
+        keep &= _reaches(cos, threshold)
+    return i[keep], j[keep], cos[keep]
+
+
+def _components(n: int, i: np.ndarray, j: np.ndarray) -> np.ndarray:
+    """Component root of each of ``n`` nodes under the edges (i, j):
+    the smallest node index of its connected component. A vectorized
+    union-find: hook the larger root of every still-split edge under
+    the smaller one, compress every path to its root, and repeat until
+    no edge spans two roots — exact for any chain length."""
+    parent = np.arange(n)
+    while True:
+        pi, pj = parent[i], parent[j]
+        split = pi != pj
+        if not split.any():
+            return parent
+        np.minimum.at(
+            parent, np.maximum(pi, pj)[split], np.minimum(pi, pj)[split]
+        )
+        while True:
+            up = parent[parent]
+            if np.array_equal(up, parent):
+                break
+            parent = up
+
+
+def _matrix(vectors: pa.Array | pa.ChunkedArray) -> np.ndarray:
+    """A non-empty Arrow ``array<double>`` column of equal-length
+    vectors as an (n, d) float64 matrix, without a per-row copy."""
+    if isinstance(vectors, pa.ChunkedArray):
+        vectors = vectors.combine_chunks()
+    return np.asarray(vectors.flatten(), np.float64).reshape(len(vectors), -1)
+
+
+def _assign(nv: np.ndarray, cents: np.ndarray) -> np.ndarray:
+    """Nearest centroid of each unit row: the largest ``fold(nv, c)``
+    scored in :func:`_dot`'s sequential order. ``np.argmax`` keeps the
+    FIRST maximum, so exact ties go to the lower cluster id."""
+    acc = np.zeros((len(nv), len(cents)))
+    for d in range(cents.shape[1]):
+        acc = acc + nv[:, d : d + 1] * cents[:, d]
+    return np.argmax(acc, axis=1).astype(np.int32)
+
+
+def _by_id(tbl: pa.Table) -> tuple[pa.Table, np.ndarray]:
+    """A group's rows in ascending id order (index order is then Spark's
+    id order, so the lowest index of a set is its min id), with the ids
+    as a numpy array for comparisons."""
+    ids = tbl.column("id").to_numpy()
+    order = np.argsort(ids, kind="stable")
+    return tbl.take(order), ids[order]
 
 
 def brute_force_topk(
@@ -193,7 +305,21 @@ def embedding_neardup_pairs(
 ) -> DataFrame:
     """Embedding-cosine near-duplicate pairs (id_a < id_b, cos_sim).
     ``exact=True`` does the full self-join (small inputs / oracles);
-    otherwise LSH banding bounds candidates."""
+    otherwise LSH banding bounds candidates.
+
+    Scale shape of the banded path: the JVM computes each vector's
+    hyperplane signature and norm and explodes it to one row per
+    (band, bucket); ONE ``groupBy("band", "bucket").applyInArrow``
+    then brute-forces each bucket with :func:`_close_pairs` (a
+    row-blocked GEMM prefilter, then the exact sequential fold of
+    :func:`_dot`, so ``cos = fold / (na * nb)`` is bit-identical to the
+    self-join's). A pair is kept only by its FIRST agreeing band, so
+    every qualifying pair is emitted exactly once and no pair-dedup
+    exchange exists. The threshold applies to the unrounded cosine;
+    rounding stays in Spark. Per-bucket work is quadratic in the
+    bucket size, which the plane count per band bounds on isotropic
+    data; the former band self-join moved every candidate pair, both
+    double vectors included, through the join."""
     v = F.col(vec_col).cast("array<double>")
     base = df.select(F.col(id_col).alias("id"), v.alias("v"))
     if exact:
@@ -201,29 +327,13 @@ def embedding_neardup_pairs(
         b = base.select(F.col("id").alias("id_b"), F.col("v").alias("vb"))
         pairs = a.join(b, F.col("id_a") < F.col("id_b"))
     else:
-        # Banded-join discipline for the degenerate-bucket case (the
-        # simhash r8 lesson, taken further). With few planes per band
-        # the bucket join degenerates — 1-bit buckets split n vectors
-        # into two ~n/2 halves, so the raw join emits O(bands * n^2/2)
-        # rows each carrying BOTH double vectors; the old shape
-        # (dropDuplicates first, cosine after) measured 74 GB of sort
-        # spill at 20k vectors. Three output-identical changes:
-        # * each pair is kept ONLY at its FIRST agreeing band (the
-        #   signatures ride the join rows, so "no earlier band agrees"
-        #   is an in-stage predicate) — every unordered pair survives
-        #   exactly once and the pair-dedup exchange disappears
-        #   entirely, along with the bands-fold redundancy in cosine
-        #   work;
-        # * per-vector norms are hoisted out of the pair loop (same
-        #   IEEE expression shape: dot / (norm_a * norm_b));
-        # * the threshold filter runs per join row inside the codegen
-        #   stage, so non-candidates never reach any exchange.
         sig = _hyperplane_signs(F.col("v"), dim, n_planes)
         per_band = n_planes // bands
         mask = (1 << per_band) - 1
-        banded = base.withColumn("sig", sig).withColumn(
-            "nrm", _norm(F.col("v"))
-        ).select(
+        # a null id pairs with nothing (id_a < id_b is null)
+        banded = base.where(F.col("id").isNotNull()).withColumn(
+            "sig", sig
+        ).withColumn("nrm", _norm(F.col("v"))).select(
             "id",
             "v",
             "sig",
@@ -242,38 +352,30 @@ def embedding_neardup_pairs(
                 )
             ).alias("bb"),
         ).select("id", "v", "sig", "nrm", "bb.band", "bb.bucket")
-        a = banded.select(
-            F.col("id").alias("id_a"), F.col("v").alias("va"),
-            F.col("sig").alias("sig_a"), F.col("nrm").alias("na"),
-            "band", "bucket",
-        )
-        b = banded.select(
-            F.col("id").alias("id_b"), F.col("v").alias("vb"),
-            F.col("sig").alias("sig_b"), F.col("nrm").alias("nb"),
-            "band", "bucket",
-        )
 
-        def band_eq(bi: int):
-            return F.shiftright(F.col("sig_a"), bi * per_band).bitwiseAND(
-                F.lit(mask)
-            ) == F.shiftright(F.col("sig_b"), bi * per_band).bitwiseAND(
-                F.lit(mask)
+        def bucket_pairs(key, tbl):  # unannotated: see cluster_reps
+            tbl, ids = _by_id(tbl)
+            sig = tbl.column("sig").to_numpy().astype(np.int64)
+            i, j, cos = _close_pairs(
+                _matrix(tbl.column("v")), threshold, tbl.column("nrm").to_numpy()
+            )
+            keep = ids[i] < ids[j]
+            # a pair is emitted only by its FIRST agreeing band
+            for bi in range(key[0].as_py()):
+                sh = bi * per_band
+                keep &= ((sig[i] >> sh) & mask) != ((sig[j] >> sh) & mask)
+            return pa.table(
+                {
+                    "id_a": tbl.column("id").take(i[keep]),
+                    "id_b": tbl.column("id").take(j[keep]),
+                    "cos_sim": cos[keep],
+                }
             )
 
-        first_agree = F.when(band_eq(0), F.lit(0))
-        for bi in range(1, bands):
-            first_agree = first_agree.when(band_eq(bi), F.lit(bi))
-        pairs = (
-            a.join(b, ["band", "bucket"])
-            .where(F.col("id_a") < F.col("id_b"))
-            .where(F.col("band") == first_agree)
-            .withColumn(
-                "cos_sim",
-                _dot(F.col("va"), F.col("vb"))
-                / (F.col("na") * F.col("nb")),
-            )
-            .where(F.col("cos_sim") >= threshold)
-            .select("id_a", "id_b", "cos_sim")
+        id_type = base.schema["id"].dataType.simpleString()
+        pairs = banded.groupBy("band", "bucket").applyInArrow(
+            bucket_pairs,
+            schema=f"id_a {id_type}, id_b {id_type}, cos_sim double",
         )
         return pairs.select(
             "id_a", "id_b", F.round("cos_sim", 6).alias("cos_sim")
@@ -340,19 +442,22 @@ def _kmeans_fit(
     ivf_topk probes).
 
     Distributed shape (the same as any scalable k-means): each
-    iteration is ONE corpus scan — centroids travel to the data as
-    k*dim broadcast literals inside the assignment expression, and the
-    centroid update is a dim-explode + grouped mean whose output is
-    k*dim rows (tiny, collected to the driver). No corpus-sized state
-    ever leaves the executors; iteration count is FIXED, not
-    convergence-tested, so the plan is static and replayable.
+    iteration is ONE corpus scan — one ``mapInArrow`` whose kernel
+    assigns every row of its partition to a centroid (centroids travel
+    in the closure, k*dim doubles) and emits only the partition's k
+    (cluster, count, sum vector) rows, which the driver adds up. No
+    corpus-sized state ever leaves the executors; iteration count is
+    FIXED, not convergence-tested, so the plan is static and
+    replayable. The final assignment runs the same kernel.
 
-    Determinism: initial centroids are the k smallest-id vectors;
-    centroid components are rounded to 9 decimals each iteration so
-    the 1e-15-scale float-summation-order wobble of the grouped mean
-    (which varies with partitioning) can never leak into assignments —
-    the same input yields byte-identical clusters at any parallelism.
-    Exact assignment ties break toward the lower cluster id.
+    Determinism: the JVM unit-normalizes; the kernel scores each
+    centroid with the same sequential fold as :func:`_dot` and breaks
+    exact ties toward the lower cluster id. Initial centroids are the
+    k smallest-id vectors; centroid = sum / count with components
+    rounded to 9 decimals each iteration, so the 1e-15-scale
+    float-summation-order wobble of the sums (which varies with
+    partitioning) can never leak into assignments — the same input
+    yields byte-identical clusters at any parallelism.
     """
     v = F.col(vec_col).cast("array<double>")
     base = (
@@ -365,44 +470,66 @@ def _kmeans_fit(
         for r in base.orderBy("id").limit(k).collect()
     ]
     centroids = [[round(x, 9) for x in c] for c in seeds]
+    id_type = base.schema["id"].dataType.simpleString()
+    if not centroids:  # empty input
+        base.unpersist(blocking=True)
+        return base.select("id", F.lit(None).cast("int").alias("cluster")), []
 
-    def assign_expr(cents: list[list[float]]):
-        scored = F.array(
-            *[
-                F.struct(
-                    _dot(
-                        F.col("nv"), F.array(*[F.lit(x) for x in c])
-                    ).alias("s"),
-                    F.lit(-ci).alias("negc"),
-                )
-                for ci, c in enumerate(cents)
-            ]
-        )
-        return (-F.array_max(scored)["negc"]).alias("cluster")
+    def partition_sums(cents: np.ndarray):
+        def run(batches):
+            kc, dim = cents.shape
+            cnt = np.zeros(kc, np.int64)
+            sums = np.zeros((kc, dim))
+            for batch in batches:
+                if batch.num_rows:
+                    nv = _matrix(batch.column(0))
+                    a = _assign(nv, cents)
+                    cnt += np.bincount(a, minlength=kc)
+                    for c in np.unique(a):
+                        sums[c] += nv[a == c].sum(axis=0)
+            yield pa.RecordBatch.from_arrays(
+                [
+                    pa.array(np.arange(kc, dtype=np.int32)),
+                    pa.array(cnt),
+                    pa.ListArray.from_arrays(
+                        pa.array(np.arange(0, kc * dim + 1, dim, dtype=np.int32)),
+                        pa.array(sums.ravel()),
+                    ),
+                ],
+                names=["cluster", "cnt", "s"],
+            )
+
+        return run
 
     for _ in range(iterations):
-        assigned = base.select("id", "nv", assign_expr(centroids))
-        upd = (
-            assigned.select("cluster", F.posexplode("nv").alias("pos", "x"))
-            .groupBy("cluster", "pos")
-            .agg(F.avg("x").alias("m"))
-            .collect()
-        )
-        by_cluster: dict[int, dict[int, float]] = {}
-        for r in upd:
-            by_cluster.setdefault(r["cluster"], {})[r["pos"]] = r["m"]
+        cents = np.array(centroids, np.float64)
+        cnt = np.zeros(len(cents), np.int64)
+        tot = np.zeros(cents.shape)
+        for r in base.select("nv").mapInArrow(
+            partition_sums(cents), "cluster int, cnt long, s array<double>"
+        ).collect():
+            cnt[r["cluster"]] += r["cnt"]
+            tot[r["cluster"]] += r["s"]
         centroids = [
-            [
-                round(by_cluster[ci][p], 9)
-                for p in range(len(centroids[ci]))
-            ]
-            if ci in by_cluster
+            [round(x, 9) for x in (tot[ci] / cnt[ci]).tolist()]
+            if cnt[ci]
             else centroids[ci]  # emptied cluster keeps its centroid
             for ci in range(len(centroids))
         ]
-    out = base.select("id", assign_expr(centroids)).localCheckpoint(
-        eager=True
-    )
+
+    cents = np.array(centroids, np.float64)
+
+    def assign_rows(batches):
+        for batch in batches:
+            if batch.num_rows:
+                cluster = _assign(_matrix(batch.column(1)), cents)
+                yield pa.RecordBatch.from_arrays(
+                    [batch.column(0), pa.array(cluster)], names=["id", "cluster"]
+                )
+
+    out = base.mapInArrow(
+        assign_rows, f"id {id_type}, cluster int"
+    ).localCheckpoint(eager=True)
     base.unpersist(blocking=True)
     return out, centroids
 
@@ -517,7 +644,7 @@ def _split_oversized(
     levels. Input/output schema is (id, nv, cluster); sub-clusters get
     fresh ids past ``n_clusters`` so ids stay unique.
 
-    Why: the within-cluster pair join downstream is quadratic in the
+    Why: the within-cluster pair search downstream is quadratic in the
     largest cluster, and real (non-isotropic) embeddings routinely
     produce one runaway cluster — without a guard that single cluster
     is a scale-killer at 100 TB. The size probe is one k-row grouped
@@ -586,7 +713,7 @@ def _split_oversized(
             f"max_cluster_size={max_cluster_size} after {max_depth} "
             f"split levels (sizes: {[s for _, s in leftover][:8]}); "
             "proceeding — identical-vector members are collapsed to "
-            "delegates before the pair join"
+            "delegates before the pair search"
         )
     return vecs
 
@@ -608,10 +735,9 @@ def semdedup(
     Returns (id, cluster, rep_id, is_rep) for every input row.
 
     Why clustering first: the exact pair search is quadratic; k-means
-    bounds it to within-cluster pairs — the pair join is an equi-join
-    on cluster with per-cluster quadratic work bounded by the largest
-    cluster, the same candidate-bounding role LSH bands play for
-    MinHash. Two default-on guards keep that bound real on skewed
+    bounds it to within-cluster pairs — per-cluster quadratic work
+    bounded by the largest cluster, the same candidate-bounding role
+    LSH bands play for MinHash. Two default-on guards keep that bound real on skewed
     data (matching the discipline of the shingle frequency cap /
     node-similarity hub cap / adamic_adar degree cap):
 
@@ -619,7 +745,7 @@ def semdedup(
       re-split by per-cluster sub-k-means (:func:`_split_oversized`,
       the FAISS big-cluster treatment) before any pair is generated,
       so a runaway cluster on real non-isotropic embeddings cannot
-      make the join quadratic in the corpus. APPROXIMATION, stated
+      make the pair search quadratic in the corpus. APPROXIMATION, stated
       plainly: when a re-split actually fires, a near-dup pair whose
       members land in different sub-clusters is not generated — the
       same recall trade every coarser k in the published SemDeDup
@@ -631,26 +757,33 @@ def semdedup(
       exactly the unguarded algorithm, which is what the driver
       oracle replays;
     * byte-identical unit vectors within a cluster are collapsed to
-      one delegate (window min-id per (cluster, nv)) before the pair
-      join — members attach to their delegate with the identical
-      implied similarity (dot(a, b) == dot(a, a) for bit-equal
-      arrays), so the pair graph and components are exactly those of
-      the naive join while the degenerate all-identical cluster
-      k-means cannot split costs O(n), not O(n^2).
+      one delegate (their min id) before the pair search — members
+      attach to their delegate with the identical implied similarity
+      (dot(a, b) == dot(a, a) for bit-equal arrays), so the pair
+      graph and components are exactly those of the naive all-pairs
+      search while the degenerate all-identical cluster k-means
+      cannot split costs O(n), not O(n^2).
 
-    The canonicalizer's connected components give
-    the transitive near-dup groups (a~b, b~c is one group), and the
-    representative is the NUMERIC minimum id within each group (its
-    original type, matching exact_dedup), never the string-order label
-    the canonicalizer itself uses internally.
+    Scale shape of the pair stage: ONE ``groupBy("cluster")
+    .applyInArrow`` after k-means and the size guard. Per cluster the
+    kernel collapses bit-identical unit vectors (keyed as Spark groups
+    them, so -0.0 == 0.0) to their min-id delegate, finds delegate
+    pairs with :func:`_close_pairs` (a row-blocked GEMM prefilter, then
+    the exact sequential fold of :func:`_dot`, so every similarity is
+    bit-identical to the JVM expression's), attaches each member to
+    its delegate when ``fold(nv, nv) >= threshold``, and groups with
+    the exact union-find :func:`_components` (a~b, b~c is one group
+    at any chain length). The representative is the NUMERIC minimum
+    id within each group (its original type, matching exact_dedup).
+    Nothing but the per-cluster rows crosses an exchange: the former
+    shape ran a delegate window, a cluster self-join and a
+    label-propagation connected-components job.
 
     The pair stage scores cosine as a dot product of the unit-
     normalized vectors — division-free, so an all-zero embedding gets
     similarity 0 with everything instead of throwing DIVIDE_BY_ZERO
     under this build's default ANSI mode.
     """
-    from .canonicalize import connected_components_auto
-
     clusters = kmeans_embeddings(df, id_col, vec_col, k, iterations)
     v = F.col(vec_col).cast("array<double>")
     vecs = (
@@ -662,63 +795,44 @@ def semdedup(
     # only renumbers the INTERNAL pair-bounding key
     vecs = vecs.withColumn("cluster0", F.col("cluster"))
     vecs = _split_oversized(vecs, k, max_cluster_size, max_split_depth)
-    # exact-duplicate collapse: one delegate (min id) per distinct unit
-    # vector per cluster; members pair with their delegate iff the
-    # implied similarity dot(nv, nv) passes — bit-equal arrays give
-    # bit-equal dots, so the component structure matches the naive
-    # all-pairs join exactly while identical vectors cost O(n)
-    tagged = vecs.withColumn(
-        "_did", F.min("id").over(Window.partitionBy("cluster", "nv"))
-    )
-    delegates = tagged.where(F.col("id") == F.col("_did"))
-    member_pairs = (
-        tagged.where(F.col("id") != F.col("_did"))
-        .where(_dot(F.col("nv"), F.col("nv")) >= threshold)
-        .select(F.col("_did").alias("id_a"), F.col("id").alias("id_b"))
-    )
-    a = delegates.select(
-        F.col("id").alias("id_a"), F.col("nv").alias("va"), "cluster"
-    )
-    b = delegates.select(
-        F.col("id").alias("id_b"), F.col("nv").alias("vb"), "cluster"
-    )
-    pairs = (
-        a.join(b, "cluster")
-        .where(F.col("id_a") < F.col("id_b"))
-        .withColumn("cos_sim", _dot(F.col("va"), F.col("vb")))
-        .where(F.col("cos_sim") >= threshold)
-        .select("id_a", "id_b")
-        .unionByName(member_pairs)
-    )
-    cc = connected_components_auto(
-        df.sparkSession,
-        pairs.select(
-            F.col("id_a").cast("string").alias("a"),
-            F.col("id_b").cast("string").alias("b"),
-        ),
-        fixed_iterations=8,
-    )
-    comp = vecs.select("id", F.col("cluster0").alias("cluster")).withColumn(
-        "_sid", F.col("id").cast("string")
-    ).join(
-        cc.select(
-            F.col("entity_id").alias("_sid"),
-            F.col("canonical_id").alias("_comp"),
-        ),
-        "_sid",
-        "left",
-    )
-    reps = (
-        comp.where(F.col("_comp").isNotNull())
-        .groupBy("_comp")
-        .agg(F.min("id").alias("_rep"))
-    )
-    return (
-        comp.join(reps, "_comp", "left")
-        .select(
-            "id",
-            "cluster",
-            F.coalesce("_rep", F.col("id")).alias("rep_id"),
-            (F.coalesce("_rep", F.col("id")) == F.col("id")).alias("is_rep"),
+
+    # left unannotated: applyInArrow infers its eval type from the
+    # hints and fails on this module's postponed (string) annotations
+    def cluster_reps(tbl):
+        tbl, ids = _by_id(tbl)
+        nv = _matrix(tbl.column("nv"))
+        # one delegate per distinct vector: np.unique's first index is
+        # the min id, rows being id-sorted; the key normalizes -0.0 and
+        # NaN the way Spark's grouping does
+        key = np.ascontiguousarray(np.where(np.isnan(nv), np.nan, nv + 0.0))
+        _, dl, inv = np.unique(
+            key.view(np.dtype((np.void, key.itemsize * key.shape[1]))).ravel(),
+            return_index=True,
+            return_inverse=True,
         )
+        di, dj, _ = _close_pairs(nv[dl], threshold)
+        # bit-equal vectors give bit-equal dots: a member's similarity
+        # to its delegate is the delegate's self-fold
+        members = np.flatnonzero(
+            _reaches(_fold_dot(nv[dl], nv[dl]), threshold)[inv]
+            & (np.arange(len(ids)) != dl[inv])
+        )
+        root = _components(
+            len(ids),
+            np.concatenate((dl[di], members)),
+            np.concatenate((dl[dj], dl[inv[members]])),
+        )
+        return pa.table(
+            {
+                "id": tbl.column("id"),
+                "cluster": tbl.column("cluster0"),
+                "rep_id": tbl.column("id").take(root),
+                "is_rep": ids[root] == ids,
+            }
+        )
+
+    id_type = vecs.schema["id"].dataType.simpleString()
+    return vecs.groupBy("cluster").applyInArrow(
+        cluster_reps,
+        schema=f"id {id_type}, cluster int, rep_id {id_type}, is_rep boolean",
     )

@@ -809,6 +809,91 @@ def test_semdedup_identical_vector_cluster_is_linear(spark):
     assert all(sd[100 + j] == (100 + j, True) for j in range(5))
 
 
+def test_csr_kernel_bounds_name_the_join_path():
+    """The broadcast CSR kernel refuses inputs past its int32 posting
+    offsets / doc indices and its int64 pair keys, pointing at the
+    exchange path instead of wrapping."""
+    D._check_csr_bounds(150_000, 32_000_000)
+    D._check_csr_bounds(2**31 - 1, 2**31 - 1)
+    for n_docs, npost in ((10, 2**31), (2**31, 10)):
+        with pytest.raises(ValueError, match="pair_mode='join'"):
+            D._check_csr_bounds(n_docs, npost)
+
+
+def test_semdedup_chain_collapses_to_one_rep(spark):
+    """Transitive groups inside one cluster: a~b and b~c pass the
+    threshold while cos(a, c) does not, and c still gets a's id, the
+    numeric min of the group, as its representative (a component, not
+    its nearest neighbour's min)."""
+    import math
+
+    from bertseyeview_spark.operators.similarity import semdedup
+
+    t = 0.1  # cos(t) ~ 0.995 >= 0.99 > cos(2t) ~ 0.980
+    rows = [
+        (3, [1.0, 0.0, 0.0, 0.0]),
+        (5, [math.cos(t), math.sin(t), 0.0, 0.0]),
+        (9, [math.cos(2 * t), math.sin(2 * t), 0.0, 0.0]),
+        (7, [0.0, 0.0, 1.0, 0.0]),
+    ]
+    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+    sd = {
+        r["id"]: (r["cluster"], r["rep_id"], r["is_rep"])
+        for r in semdedup(
+            df, "vec_id", "embedding", k=1, iterations=1, threshold=0.99
+        ).collect()
+    }
+    assert sd == {
+        3: (0, 3, True),
+        5: (0, 3, False),
+        9: (0, 3, False),
+        7: (0, 7, True),
+    }
+
+
+def test_embedding_neardup_keeps_pair_at_exact_threshold(spark):
+    """A pair whose cosine equals the threshold exactly is kept by the
+    banded path as by the exact self-join. The threshold is the pair's
+    cosine computed the way Spark computes it (sequential fold, sqrt
+    norms, one division); the pair is picked so a plain numpy GEMM of
+    the normalized rows lands BELOW it, which the banded kernel's
+    prefilter must tolerate."""
+    import math
+
+    def fold(a, b):
+        acc = 0.0
+        for x, y in zip(a, b):
+            acc = acc + x * y
+        return acc
+
+    rng = np.random.RandomState(23)
+    base = [float(x) for x in rng.standard_normal(16)]
+    for _ in range(100):
+        near = [x + 0.01 * float(e) for x, e in zip(base, rng.standard_normal(16))]
+        cos = fold(base, near) / (
+            math.sqrt(fold(base, base)) * math.sqrt(fold(near, near))
+        )
+        u = np.array([base, near])
+        u /= np.sqrt([fold(base, base), fold(near, near)])[:, None]
+        if (u @ u.T)[0, 1] < cos:
+            break
+    else:
+        raise AssertionError("no GEMM-undershoot pair found")
+    rows = [(0, base), (1, near)] + [
+        (2 + i, [float(x) for x in rng.standard_normal(16)]) for i in range(20)
+    ]
+    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+    for exact in (True, False):
+        got = {
+            (r["id_a"], r["id_b"]): r["cos_sim"]
+            for r in SIM.embedding_neardup_pairs(
+                df, threshold=cos, dim=16, n_planes=12, bands=12, exact=exact
+            ).collect()
+        }
+        assert set(got) == {(0, 1)}, exact
+        assert abs(got[(0, 1)] - cos) <= 5e-7
+
+
 def test_ivf_topk_clustered_full_recall_at_nprobe1(spark):
     """On data WITH cluster structure (the real-corpus shape) IVF
     achieves full recall probing a single list: 4 well-separated

@@ -562,8 +562,9 @@ def test_heavy_hitters_exact_and_fallback(spark):
 def test_repetition_signals_hand_computed(spark):
     """Gopher repetition table vs hand computation: duplicate-line
     fractions (plain + char-weighted), top-n-gram char mass with the
-    (count, mass) tie-break, duplicated-n-gram char mass, and the 0.0
-    floor for docs too short for an n."""
+    (count, mass) tie-break, duplicated-n-gram char mass, the 0.0
+    floor for docs too short for an n, and 0.0 everywhere for null
+    text, whitespace-only text and a null id."""
     from bertseyeview_spark.operators.textquality import repetition_signals
 
     rows = [
@@ -571,8 +572,12 @@ def test_repetition_signals_hand_computed(spark):
         (1, "a b a b a b"),
         (2, "p q r s t u p q r s t u"),
         (3, "solo"),
+        (4, None),
+        (5, "   \n \n  "),
+        (6, "Hello World\n  hello world  \nfoo"),
+        (None, "x\nx\nx y x y x y"),
     ]
-    df = spark.createDataFrame(rows, ["doc_id", "text"])
+    df = spark.createDataFrame(rows, "doc_id long, text string")
     got = {
         r["id"]: r.asDict()
         for r in repetition_signals(df, "doc_id", "text").collect()
@@ -592,6 +597,18 @@ def test_repetition_signals_hand_computed(spark):
     assert got[3]["dup_line_frac"] == 0.0
     assert got[3]["top_2gram_char_frac"] == 0.0
     assert got[3]["dup_10gram_char_frac"] == 0.0
+    # null text, whitespace-only text and a null id: no lines, no grams
+    cols = [c for c in got[0] if c != "id"]
+    assert len(cols) == 11
+    for i in (4, 5, None):
+        assert all(got[i][c] == 0.0 for c in cols), i
+    # doc 6: lines lowercased and trimmed -> "hello world" x2, "foo";
+    # dup 1/3, char-weighted 11 / (2*11 + 3)
+    assert got[6]["dup_line_frac"] == 1 / 3
+    assert got[6]["dup_line_char_frac"] == 11 / 25
+    # doc 6: 2-grams "hello world" x2 (mass 22), "world hello", "world
+    # foo" (11 + 9) -> top 22/42
+    assert got[6]["top_2gram_char_frac"] == 22 / 42
 
 
 def test_chunk_text_hand_computed(spark):

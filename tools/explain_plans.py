@@ -31,7 +31,7 @@ QUERIES = [
     ("label_abundance_two_groups", "ONE scan of the mention set: membership tags via broadcast left joins, single grouped agg with conditional counts"),
     ("citation_rows", "metadata prepped once, joined twice (article/reference side); single boundary window for the ordinal"),
     ("node_properties_search", "properties map built from one meta join; map projection; filter + top-k"),
-    ("embedding_neardup", "LSH banded self-join (no cross join); codegen'd cosine verify"),
+    ("embedding_neardup", "JVM-side signatures, norms and (band, bucket) explode; ONE groupBy(band, bucket) applyInArrow brute-forces each bucket (GEMM prefilter + exact sequential-fold cosine), first agreeing band only; no pair-dedup exchange"),
     ("ngram_jaccard_dedup", "cost-based plan selection: broadcast-CSR MapInArrow pair counting at this scale (shuffle equi-join past the broadcast ceiling, ppjoin prefix pruning past the candidate-volume threshold); codegen shingling, broadcast size joins, exact Jaccard filter in Catalyst"),
     ("motif_two_hop", "pattern terms compiled to chained equi-joins (Cypher MATCH analogue)"),
     ("gopher_quality", "codegen'd splits + one (id, bigram) grouped count; no Python"),
@@ -49,11 +49,11 @@ QUERIES = [
     ("temperature_resample", "domain-mix rates compiled to ONE codegen'd when/otherwise hash filter over the scan — no shuffle; the grouped count that derived the rates is a separate tiny job"),
     ("exact_substring_dedup", "codegen arrays_zip window build + dual-seed xxhash64 fingerprints; both shuffles key on the fingerprint (AQE skew-split covers boilerplate keys); per-doc gaps-and-islands window bounded by doc length"),
     ("substring_cut", "flag stage shared with exact_substring_dedup; canonical pick = one row_number window over the fingerprint; cut applied as a per-doc HOF filter against that doc's own collected ranges — no corpus-wide state"),
-    ("repetition_signals", "ONE cached tokenize; nine per-n window explodes union into a single (id, n, gram) stream (id in the key spreads boilerplate grams); one repartition-then-complete grouped count + one per-id conditional aggregation replace nine independent subtrees"),
+    ("repetition_signals", "zero-shuffle: JVM tokenize + lowercased/trimmed line split feed ONE mapInArrow that counts lines and 2..10-grams per document; no explode, no exchange, no join"),
     ("bfs_distances", "frontier expansion: per hop ONE frontier-edge equi-join, then dedup + left-anti membership probe against the settled set (first discovery = shortest hop, no min-merge needed); work tracks the expanding boundary"),
     ("warc_roundtrip", "one Arrow pass per WARC blob (binaryFile granularity); no per-record Python round trips; md5/length computed JVM-side on the parsed payloads"),
     ("text_chunking", "zero-shuffle: one codegen projection + posexplode of a closed-form per-doc chunk grid"),
-    ("semdedup", "k-means centroids as broadcast literals (one scan/iteration); size-guarded cluster equi-join for pairs; delegate collapse via (cluster, nv) window"),
+    ("semdedup", "k-means: one mapInArrow scan per iteration emitting k (cluster, count, sum) rows per partition; pairs: ONE size-guarded groupBy(cluster) applyInArrow (delegate collapse, GEMM prefilter + exact fold, union-find); no self-join, no components job"),
     ("weighted_sssp", "Bellman-Ford frontier relaxation: per round ONE frontier-edge equi-join + grouped min-merge against the settled costs (a later discovery can be cheaper, unlike BFS first-discovery); parallel edges min-collapsed once up front"),
     ("closeness_centrality", "per-source BFS keyed (source, vertex): per hop ONE frontier-edge equi-join + dedup + left-anti settled probe; state is |sample| x |reach| — the pivot-sampling knob that keeps closeness linear at scale; final grouped count/sum + one division"),
     ("dsir_select", "hashed-ngram importance weights: codegen window build, two B-row bucket histograms whose log-ratio table BROADCASTS onto per-doc bucket counts; one corpus shuffle (doc x bucket) + bucket-ordered fold; top-k as TakeOrderedAndProject"),
@@ -106,20 +106,11 @@ def _plan_only_overrides():
             materialize=False,
         )
 
-    def repetition(spark, sf_dir):
-        from bertseyeview_spark.operators.textquality import (
-            repetition_signals,
-        )
-
-        docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-        return repetition_signals(docs, "doc_id", "text", materialize=False)
-
     return {
         "ngram_jaccard_dedup": ngram,
         "minhash_lsh_dedup": minhash,
         "exact_substring_dedup": substr_spans,
         "substring_cut": substr_cut,
-        "repetition_signals": repetition,
     }
 
 
